@@ -1642,22 +1642,16 @@ def run_bench(sf_dir: str, cpus: str, extract_only: bool = False) -> dict:
     mult = int(os.environ.get("SPARK_GRAFT_SCALE_MULT", "8"))
     store, n_pages = _pages_store(spark, sf_dir, mult)
     pages = spark.read.parquet(store)
-    cfg = ExtractorConfig(
-        output_type="json",
-        # A/B hook for the numbering-shuffle experiment (BENCH.md): ship
-        # 3 ints per page through the doc_id exchange instead of whole rows
-        numbering_narrow=os.environ.get("SPARK_GRAFT_NUMBERING_NARROW", "")
-        not in ("", "0"),
-    )
+    cfg = ExtractorConfig(output_type="json")
     # warm EVERY core's Python worker + the broadcast machinery with one full
     # untimed pass (a limit() warmup only touches one partition, leaving the
     # other workers to fork+import pandas inside the first timed run). Worker
     # spawn is a per-executor constant, not steady-state throughput — mirrors
     # the reference's avg-of-3 methodology, benchmarks.md:5.
     def timed_extract() -> tuple[int, float]:
-        # persist-with-owner: narrow/salted numbering feeds the post-UDF
-        # frame to both sides of a join — without an owned persist the page
-        # UDF would run twice and the A/B would penalize those modes 2x
+        # persist-with-owner: salted numbering (AUTO_SALT on a skewed
+        # store) feeds the post-UDF frame to both sides of a join — without
+        # an owned persist the page UDF would run twice
         owned: list = []
         t0 = time.perf_counter()
         n = extract_questions(pages, cfg, persist_to=owned).count()
@@ -1877,103 +1871,6 @@ def run_scaling(
         "n_pages": best["n_pages"],
     }
     return summary
-
-
-def run_numbering_ab(
-    sf_dir: str, levels=(8, 32), mult: int = 24, trials: int = 2
-) -> dict:
-    """A/B the plain numbering window (whole page rows through the doc_id
-    exchange) against the narrow-projection + broadcast-join variant
-    (3 ints per page through the exchange; wide rows never shuffle) —
-    VERDICT r3 #6. Each (cores, mode) cell is a fresh bench child over the
-    same replicated store; adjacent hardware probes bracket every trial so
-    a shared-VM load swing can't masquerade as a mode effect."""
-    rows = []
-    for cpus in levels:
-        for t in range(trials):
-            cells = {}
-            probe_before = _mp_probe(min(cpus, os.cpu_count() or 8))
-            for mode, env in (
-                # plain explicitly CLEARS the flag: a value exported in the
-                # parent shell would otherwise leak through dict(os.environ)
-                # and silently turn the A/B into narrow-vs-narrow
-                ("plain", {"SPARK_GRAFT_NUMBERING_NARROW": ""}),
-                ("narrow", {"SPARK_GRAFT_NUMBERING_NARROW": "1"}),
-            ):
-                r = _one_config(sf_dir, cpus, mult, extra_env=env)
-                cells[mode] = round(
-                    r["n_pages"] / min(r["extract_runs_sec"]), 2
-                )
-                n_pages = r["n_pages"]
-            probe_after = _mp_probe(min(cpus, os.cpu_count() or 8))
-            rows.append(
-                {
-                    "cpus": cpus,
-                    "trial": t,
-                    "plain_docs_s": cells["plain"],
-                    "narrow_docs_s": cells["narrow"],
-                    "narrow_over_plain": round(
-                        cells["narrow"] / cells["plain"], 3
-                    ),
-                    "hw_probe_before": probe_before,
-                    "hw_probe_after": probe_after,
-                    "probe_drift": round(probe_after / probe_before, 3),
-                    "n_pages": n_pages,
-                }
-            )
-    # matched-probe verdict per level: best trial by probe stability
-    verdict = {}
-    for cpus in levels:
-        lv = [r for r in rows if r["cpus"] == cpus]
-        best = min(lv, key=lambda r: abs(1 - r["probe_drift"]))
-        verdict[str(cpus)] = best["narrow_over_plain"]
-    return {"rows": rows, "verdict_narrow_over_plain": verdict, "mult": mult}
-
-
-def update_numbering_ab_md(summary: dict, path: str = "BENCH.md") -> None:
-    lines = [
-        "## Numbering shuffle A/B",
-        "",
-        "Plain doc_id window (whole page rows through the exchange) vs the",
-        "narrow `(doc_id, page_idx, q_count)` projection + broadcast-join",
-        "variant (`ExtractorConfig(numbering_narrow=True)`): same replicated",
-        f"store (mult {summary['mult']}), fresh bench child per cell,",
-        "hardware probes bracketing every trial.",
-        "",
-        "| cores | trial | plain docs/s | narrow docs/s | narrow/plain | probe drift |",
-        "|---|---|---|---|---|---|",
-    ]
-    for r in summary["rows"]:
-        lines.append(
-            f"| {r['cpus']} | {r['trial']} | {r['plain_docs_s']} | "
-            f"{r['narrow_docs_s']} | {r['narrow_over_plain']} | "
-            f"{r['probe_drift']} |"
-        )
-    v = summary["verdict_narrow_over_plain"]
-    adopted = all(x >= 1.10 for x in v.values())
-    lines += [
-        "",
-        "Matched-probe verdict (most probe-stable trial per level): "
-        + ", ".join(f"{k} cores -> {x}x" for k, x in v.items())
-        + ". Adoption rule: flip the default only if narrow wins >=1.10x",
-        "(the broadcast additionally bounds the mode to driver-sized",
-        "page-count tables, so it can never be the 10^12-page default).",
-        (
-            "Outcome: threshold MET at every level — flip"
-            " ExtractorConfig.numbering_narrow to True for bounded corpora"
-            " and update this line once the default lands (the flag itself"
-            " is NOT flipped by this bench)."
-            if adopted
-            else "Outcome: NOT adopted — plain window stays the default; the"
-            " owned MEMORY_AND_DISK persist of the post-UDF frame (needed so"
-            " the UDF doesn't run for both join sides) plus the broadcast"
-            " materialization cost more than the wide-row window exchange"
-            " saves at this row width; mode stays available for genuinely"
-            " bandwidth-starved clusters."
-        ),
-        "",
-    ]
-    _upsert_section(path, "## Numbering shuffle A/B", "\n".join(lines))
 
 
 # canonical BENCH.md section order: every upsert replaces its own heading
@@ -2809,8 +2706,6 @@ def main() -> None:
     ap.add_argument("--dedup-scaling", action="store_true")
     ap.add_argument("--stats-incremental", action="store_true")
     ap.add_argument("--dedup-extract-only", action="store_true")
-    ap.add_argument("--numbering-ab", action="store_true",
-                    help="plain vs narrow numbering window A/B -> BENCH.md")
     ap.add_argument("--ivf-store-ab", action="store_true",
                     help="ANN assignment A/B: fresh re-score vs committed ivf index")
     ap.add_argument("--sig-store-ab", action="store_true",
@@ -2993,15 +2888,6 @@ def main() -> None:
             trials=args.trials if args.trials is not None else 2,
         )
         update_sig_ab_md(summary)
-        print(json.dumps(summary))
-        return
-    if args.numbering_ab:
-        summary = run_numbering_ab(
-            sf_dir,
-            mult=args.mult if args.mult is not None else 24,
-            trials=args.trials if args.trials is not None else 2,
-        )
-        update_numbering_ab_md(summary)
         print(json.dumps(summary))
         return
     if args.lineage:

@@ -33,6 +33,7 @@ Scale notes (100 TB / 10^12 docs):
 from __future__ import annotations
 
 import json
+import time
 from dataclasses import dataclass
 
 import pandas as pd
@@ -74,12 +75,6 @@ class ExtractorConfig:
     # dropDuplicatesWithinWatermark, and the extra url shuffle is not free —
     # enable for batch runs over raw re-crawled corpora.
     dedup_pages: bool = False
-    # plain-window variant: number on a narrow (doc_id, page_idx, q_count)
-    # projection and broadcast the numbers back so wide page rows never
-    # shuffle (see with_page_numbering). Opt-in: the broadcast bounds it
-    # to driver-sized page-count tables; benched in BENCH.md "Numbering
-    # shuffle A/B". Ignored when salting engages.
-    numbering_narrow: bool = False
 
     def __post_init__(self):
         if self.output_type not in ("txt", "json", "markdown"):
@@ -137,6 +132,16 @@ def split_quarantine(pages_meta: DataFrame) -> tuple[DataFrame, DataFrame]:
     return pages_meta.filter(ok), pages_meta.filter(~ok)
 
 
+def valid_pv_pages(pages: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The prefix every exam page stage shares: pt pages, url metadata,
+    the F1 quarantine split, then the F2 filter to PV body pages (the
+    cover, page 0, carries no questions). Returns (pv, quarantined)."""
+    meta = with_url_metadata(pages.filter(F.col("lang") == "pt"))
+    valid, quarantined = split_quarantine(meta)
+    pv = valid.filter((F.col("kind") == "PV") & (F.col("page_idx") >= 1))
+    return pv, quarantined
+
+
 # ---------------------------------------------------------------------------
 # the one Arrow crossing: layout + preprocess + segment + parse per page
 # ---------------------------------------------------------------------------
@@ -159,6 +164,9 @@ PAGE_STRUCT = T.StructType(
         T.StructField("image_refs", T.ArrayType(T.StringType())),
         T.StructField("q_count", T.IntegerType()),
         T.StructField("questions", T.ArrayType(_QUESTION_FIELDS)),
+        # per-page loop wall of the Arrow batch, amortized per row
+        # (lineage sums it per partition; extract_pages projects it away)
+        T.StructField("wall_ms", T.DoubleType()),
     ]
 )
 
@@ -230,18 +238,26 @@ def _process_one_page(url, html, text, cfg: ExtractorConfig) -> dict:
 def make_page_udf(cfg: ExtractorConfig):
     """Scalar pandas UDF (Arrow-vectorized): (url, html, text) -> PAGE_STRUCT."""
 
-    def _page_batch(batch: pd.DataFrame) -> pd.DataFrame:
-        out = [
-            _process_one_page(u, h, t, cfg)
-            for u, h, t in zip(batch["url"], batch["html"], batch["text"])
-        ]
-        return pd.DataFrame(out)
-
     @F.pandas_udf(PAGE_STRUCT)
     def page_udf(url: pd.Series, html: pd.Series, text: pd.Series) -> pd.DataFrame:
-        return _page_batch(pd.DataFrame({"url": url, "html": html, "text": text}))
+        t0 = time.perf_counter()
+        recs = [_process_one_page(u, h, t, cfg) for u, h, t in zip(url, html, text)]
+        ms = (time.perf_counter() - t0) * 1000.0
+        out = pd.DataFrame(recs)
+        out["wall_ms"] = ms / max(len(recs), 1)
+        return out
 
     return page_udf
+
+
+def page_stage(pv: DataFrame, cfg: ExtractorConfig) -> DataFrame:
+    """THE exam page stage, shared by extract_pages and
+    lineage.run_extraction: one ArrowEvalPython over (url, html, text),
+    url-derived metadata kept JVM-side beside the PAGE_STRUCT fields."""
+    page_udf = make_page_udf(cfg)
+    return pv.withColumn("page", page_udf("url", "html", "text")).select(
+        "url", "doc_id", "page_idx", "year", "day", "color", "page.*"
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -313,7 +329,6 @@ def with_page_numbering(
     salt_chunk_size: int = 0,
     cache: bool = True,
     persist_to: list | None = None,
-    narrow_window: bool = False,
 ) -> DataFrame:
     """page_first_question = 1 + questions on earlier pages of the document.
 
@@ -323,18 +338,7 @@ def with_page_numbering(
     reproduce the same value without ever sorting a whole pathological
     document inside one task. The input is persisted in salted mode because
     it feeds both sides of the offsets join — without it the page-UDF
-    subtree upstream would execute twice.
-
-    ``narrow_window`` (plain mode only): evaluate the window on a
-    (doc_id, page_idx, q_count) projection and broadcast-join the numbers
-    back, so the WIDE page rows (text + candidate structs) never cross an
-    exchange — the doc_id shuffle ships 3 ints per page instead of whole
-    pages. Bandwidth-bound hosts win; the explicit broadcast bounds the
-    mode to corpora whose (doc_id, page_idx) table fits the driver
-    (~12 bytes/page — hundreds of millions of pages), so it stays opt-in
-    rather than the 10^12-scale default. The input feeds both join sides:
-    pass persist_to (same ownership contract as salted mode) or the page
-    UDF runs twice."""
+    subtree upstream would execute twice."""
     if salt_chunk_size == AUTO_SALT:
         # direct callers get the probe on this frame; extract_pages /
         # lineage pre-resolve on a cheaper (pre-UDF or persisted) frame
@@ -345,66 +349,6 @@ def with_page_numbering(
             .orderBy("page_idx")
             .rowsBetween(W.unboundedPreceding, -1)
         )
-        if narrow_window:
-            if cache and persist_to is not None:
-                from pyspark import StorageLevel
-
-                pages = pages.persist(StorageLevel.MEMORY_AND_DISK)
-                persist_to.append(pages)
-            # the join-back key must be UNIQUE: duplicate (doc_id,
-            # page_idx) rows would fan out quadratically (and a
-            # synthetic row-uid is not stable across branch recomputes
-            # of an unpersisted/evicted frame — monotonically_increasing_id
-            # depends on shuffle-fetch order). Numbering over duplicate
-            # page keys is undefined anyway (the plain window serializes
-            # the copies in nondeterministic tie order), so the mode
-            # REFUSES them: run dedup_latest_per_url / dedup_pages first.
-            # The guard lives IN the plan (a per-key count window feeding
-            # raise_error) rather than an eager driver collect: an
-            # unowned caller (persist_to=None) would otherwise execute
-            # the full page-UDF subtree one extra time per call just to
-            # check uniqueness. Consequence: the refusal surfaces at
-            # ACTION time as a SparkRuntimeException wrapping the
-            # "unique (doc_id, page_idx)" message, not at plan build.
-            # Both windows partition-compatibly on doc_id, so the guard
-            # adds no exchange.
-            dupcnt = F.count("*").over(
-                W.partitionBy("doc_id", "page_idx")
-            )
-            nums = (
-                pages.select("doc_id", "page_idx", "q_count")
-                .withColumn(
-                    "page_first_question",
-                    F.when(
-                        dupcnt > 1,
-                        F.raise_error(
-                            F.concat_ws(
-                                "",
-                                F.lit(
-                                    "numbering_narrow requires unique "
-                                    "(doc_id, page_idx) rows; found "
-                                    "duplicate "
-                                ),
-                                F.col("doc_id").cast("string"),
-                                F.lit("/"),
-                                F.col("page_idx").cast("string"),
-                                F.lit(
-                                    " — dedup pages first "
-                                    "(cfg.dedup_pages) or use the "
-                                    "plain/salted window"
-                                ),
-                            )
-                        ).cast("int"),
-                    ).otherwise(
-                        (
-                            F.coalesce(F.sum("q_count").over(w), F.lit(0))
-                            + 1
-                        ).cast("int")
-                    ),
-                )
-                .drop("q_count")
-            )
-            return pages.join(F.broadcast(nums), ["doc_id", "page_idx"])
         return pages.withColumn(
             "page_first_question",
             (F.coalesce(F.sum("q_count").over(w), F.lit(0)) + 1).cast("int"),
@@ -571,9 +515,7 @@ def extract_pages(
     questions, page_first_question."""
     if cfg.dedup_pages and not pre_deduped:
         pages = dedup_latest_per_url(pages)
-    meta = with_url_metadata(pages.filter(F.col("lang") == "pt"))
-    valid, _ = split_quarantine(meta)
-    pv = valid.filter((F.col("kind") == "PV") & (F.col("page_idx") >= 1))  # F2
+    pv, _ = valid_pv_pages(pages)
     # F3 as a cheap codegen prefilter BELOW the UDF: a page yields q_count>0
     # iff its text carries the marker (either case — P1 normalizes Questão).
     # Filtering on the UDF output instead would make Catalyst push the filter
@@ -584,19 +526,7 @@ def extract_pages(
         | (F.col("text").isNull() & F.col("html").isNotNull())
     )
     pv = pv.filter(has_marker)
-    page_udf = make_page_udf(cfg)
-    paged = (
-        pv.withColumn("page", page_udf("url", "html", "text"))
-        .select(
-            "url",
-            "doc_id",
-            "page_idx",
-            "year",
-            "day",
-            "color",
-            "page.*",
-        )
-    )
+    paged = page_stage(pv, cfg).drop("wall_ms")
     # numbering needs every marker-bearing page (image pages included: their
     # count advances numbering even though they emit nothing — F4). Rare
     # q_count=0 survivors (html-only pages with no marker) add 0 to the
@@ -604,11 +534,7 @@ def extract_pages(
     # resolve AUTO salting on the PRE-UDF frame: the probe then scans only
     # the url-derived doc_id column, never the page UDF subtree
     chunk = resolve_salt_chunk(pv, cfg.salt_chunk_size)
-    counted = with_page_numbering(
-        paged, chunk, persist_to=persist_to,
-        narrow_window=cfg.numbering_narrow,
-    )
-    return counted
+    return with_page_numbering(paged, chunk, persist_to=persist_to)
 
 
 def extract_questions(
@@ -867,9 +793,7 @@ def materialize_images(pages: DataFrame, pv: DataFrame | None = None) -> DataFra
     run_extraction passes its own so images mode does not re-derive URL
     metadata over the whole input a second time per run."""
     if pv is None:
-        meta = with_url_metadata(pages.filter(F.col("lang") == "pt"))
-        valid, _ = split_quarantine(meta)
-        pv = valid.filter((F.col("kind") == "PV") & (F.col("page_idx") >= 1))
+        pv, _ = valid_pv_pages(pages)
     # both marker forms: raw UTF-8 AND the ensure_ascii JSON escape
     # (⟦...) — the prefilter must agree with count_image_spans or a
     # page gets image_refs from the text path with no images row here

@@ -5,10 +5,11 @@ per-partition lineage + metrics". The reference has neither (it is a
 single-process script, re-run from zero on failure — pdf_extraction_test.py
 just loops `extract_pdf`); this module adds both, Spark-first:
 
-  * **lineage**: the page stage runs through an Arrow-batched ``mapInPandas``
-    wrapper that stamps each row with its task partition id and amortized
-    batch wall time; a per-partition aggregate is appended to a ``lineage``
-    parquet table next to the outputs (run_id, part_id, input_pages,
+  * **lineage**: the run calls the batch path's page stage
+    (``extract.page_stage``, one Arrow UDF that also returns its amortized
+    batch wall time) and stamps each row JVM-side with its task partition
+    id; a per-partition aggregate is appended to a ``lineage`` parquet
+    table next to the outputs (run_id, part_id, input_pages,
     marker_pages, q_candidates, parse_failures, wall_ms).
   * **checkpoint-resume**: the unit of work is the *document* (page numbering
     is a running sum across a document's pages — resuming mid-document would
@@ -41,63 +42,18 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 from . import runfs
 from .extract import (
     ExtractorConfig,
-    PAGE_STRUCT,
-    _process_one_page,
     build_answer_keys,
+    page_stage,
     questions_from_counted,
     resolve_salt_chunk,
-    split_quarantine,
+    valid_pv_pages,
     with_page_numbering,
     with_url_metadata,
 )
 
-_META_COLS = ["url", "doc_id", "page_idx", "year", "day", "color"]
-
-INSTRUMENTED_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType()),
-        T.StructField("doc_id", T.StringType()),
-        T.StructField("page_idx", T.IntegerType()),
-        T.StructField("year", T.IntegerType()),
-        T.StructField("day", T.StringType()),
-        T.StructField("color", T.StringType()),
-        *PAGE_STRUCT.fields,
-        T.StructField("part_id", T.IntegerType()),
-        T.StructField("wall_ms", T.DoubleType()),
-    ]
-)
-
-def instrumented_page_stage(pv: DataFrame, cfg: ExtractorConfig) -> DataFrame:
-    """Page UDF + metrics in ONE Arrow crossing.
-
-    Identical per-page semantics to extract.make_page_udf (both call
-    _process_one_page); additionally emits the task partition id and the
-    batch wall time amortized per row, so a plain groupBy(part_id) over the
-    output yields per-partition lineage without a second pass."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ctx = TaskContext.get()
-        part_id = ctx.partitionId() if ctx is not None else -1
-        for pdf in batches:
-            t0 = time.perf_counter()
-            recs = [
-                _process_one_page(u, h, t, cfg)
-                for u, h, t in zip(pdf["url"], pdf["html"], pdf["text"])
-            ]
-            ms = (time.perf_counter() - t0) * 1000.0
-            out = pd.DataFrame(recs)
-            for c in _META_COLS:
-                out[c] = pdf[c].values
-            out["part_id"] = part_id
-            out["wall_ms"] = ms / max(len(pdf), 1)
-            yield out[[f.name for f in INSTRUMENTED_SCHEMA.fields]]
-
-    cols = _META_COLS + ["html", "text"]
-    return pv.select(*cols).mapInPandas(run, INSTRUMENTED_SCHEMA)
-
 
 def partition_lineage(paged: DataFrame) -> DataFrame:
-    """Per-partition metrics aggregate over the instrumented page stage.
+    """Per-partition metrics aggregate over the page stage (with part_id).
     No run_id column: the table is written under lineage/run_id=<id>, so
     the id lives in the partition path (adding the column here only to
     drop it at the write site was dead threading)."""
@@ -118,17 +74,13 @@ def require_supported_store(out_dir: str) -> None:
     exists for the store's scheme (plain POSIX paths and file:// are
     built in; object-store schemes must be registered — see
     enem_spark/runfs.py for the six-primitive port contract). Until
-    round 5 this was `require_local_store`, a blanket POSIX-only refusal:
-    the protocol's control plane called `os` directly, so on s3:// every
-    probe silently returned False and exactly-once degraded to
-    re-extracting everything with no resume. The control plane now runs
-    through `runfs.fs_for(out_dir)` everywhere, so the only thing left
-    to check is that such an implementation exists."""
+    round 5 this was a blanket POSIX-only refusal: the protocol's control
+    plane called `os` directly, so on s3:// every probe silently returned
+    False and exactly-once degraded to re-extracting everything with no
+    resume. The control plane now runs through `runfs.fs_for(out_dir)`
+    everywhere, so the only thing left to check is that such an
+    implementation exists."""
     runfs.require_supported_store(out_dir)
-
-
-# backward-compat alias (docs/jobs referenced the old name)
-require_local_store = require_supported_store
 
 
 def _exists(path: str) -> bool:
@@ -288,9 +240,9 @@ def run_extraction(
         from .extract import dedup_latest_per_url
 
         pages = dedup_latest_per_url(pages)
-    meta = with_url_metadata(pages.filter(F.col("lang") == "pt"))
-    valid, quarantined = split_quarantine(meta)
-    pv = valid.filter((F.col("kind") == "PV") & (F.col("page_idx") >= 1))
+    # no has_marker prefilter (unlike extract_pages): input_pages and the
+    # lineage table count every valid PV page, marker-free ones included
+    pv, quarantined = valid_pv_pages(pages)
 
     done = processed_doc_ids(spark, out_dir)
     if done is not None:
@@ -298,7 +250,11 @@ def run_extraction(
         # AQE broadcasts while it is small, shuffles (skew-free key) after
         pv = pv.join(done, "doc_id", "left_anti")
 
-    paged = instrumented_page_stage(pv, cfg).persist()
+    paged = (
+        page_stage(pv, cfg)
+        .withColumn("part_id", F.spark_partition_id())
+        .persist()
+    )
     try:
         n_pages = paged.count()
         n_questions = 0
@@ -340,8 +296,7 @@ def run_extraction(
             # read, no UDF re-execution)
             chunk = resolve_salt_chunk(paged, cfg.salt_chunk_size)
             counted = with_page_numbering(
-                paged.filter(F.col("q_count") > 0), chunk, cache=False,
-                narrow_window=cfg.numbering_narrow,
+                paged.filter(F.col("q_count") > 0), chunk, cache=False
             )
             # keys from ALL pages (no lang filter), matching
             # extract_questions: an answer-key page is mostly digit/letter
@@ -451,7 +406,7 @@ _ANCHOR_STRUCT = T.ArrayType(
     )
 )
 
-HTML_INSTRUMENTED_SCHEMA = T.StructType(
+HTML_STAGE_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),
         T.StructField("url", T.StringType()),
@@ -470,13 +425,13 @@ def instrumented_html_stage(
     pages: DataFrame, with_anchors: bool = False
 ) -> DataFrame:
     """htmlops.extract_main_py (+ anchor_texts_py when ``with_anchors``)
-    + metrics in ONE Arrow crossing — the web sibling of
-    instrumented_page_stage (same per-row semantics as
-    htmlops.extract_main_content / extract_anchor_texts, same shared pure
-    functions). Carrying anchors as a nested array column (field names
-    pinned to htmlops.ANCHORS_SCHEMA) means the anchors side table costs
-    no second html decode; when the flag is off, the second parser pass is
-    skipped entirely so the default hot path pays nothing for it."""
+    + metrics (task partition id, amortized batch wall) in ONE Arrow
+    crossing — same per-row semantics as htmlops.extract_main_content /
+    extract_anchor_texts, same shared pure functions. Carrying anchors as
+    a nested array column (field names pinned to htmlops.ANCHORS_SCHEMA)
+    means the anchors side table costs no second html decode; when the
+    flag is off, the second parser pass is skipped entirely so the default
+    hot path pays nothing for it."""
     from .htmlops import anchor_texts_py, extract_mains, main_frame
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -509,7 +464,7 @@ def instrumented_html_stage(
             yield out
 
     return pages.select("doc_id", "url", "html").mapInPandas(
-        run, HTML_INSTRUMENTED_SCHEMA
+        run, HTML_STAGE_SCHEMA
     )
 
 

@@ -49,6 +49,9 @@ def test_run_extraction_matches_batch_and_writes_lineage(spark, pages_df, tmp_pa
     assert totals["p"] == summary["input_pages"]
     assert totals["q"] >= written.count()  # candidates >= emitted (F6 drops)
     assert lineage.filter(F.col("wall_ms") <= 0).count() == 0
+    # part_id is stamped JVM-side on every page row: one row per partition
+    part_ids = [r["part_id"] for r in rows]
+    assert None not in part_ids and len(set(part_ids)) == len(part_ids)
 
 
 def test_rerun_is_noop_and_resume_processes_only_new_docs(spark, pages_df, tmp_path):
@@ -132,16 +135,16 @@ def test_committed_run_id_reuse_never_destroys(spark, pages_df, tmp_path):
     assert s3["input_pages"] == 0
 
 
-def test_require_local_store_rejects_object_store(spark, pages_df):
+def test_require_supported_store_rejects_object_store(spark, pages_df):
     import pytest as _pytest
 
-    from enem_spark.lineage import require_local_store
+    from enem_spark.lineage import require_supported_store
 
     cfg = ExtractorConfig(output_type="json")
     with _pytest.raises(ValueError, match="s3"):
         run_extraction(spark, pages_df, cfg, "s3://bucket/out", "r1")
-    require_local_store("/plain/posix/path")  # no raise
-    require_local_store("relative/path")
+    require_supported_store("/plain/posix/path")  # no raise
+    require_supported_store("relative/path")
 
 
 def test_quarantine_table_written(spark, pages_df, tmp_path):

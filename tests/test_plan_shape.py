@@ -62,6 +62,35 @@ def test_no_cartesian_or_nested_loop(plan):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
+def test_lineage_page_stage_is_the_batch_udf(spark, tmp_path, monkeypatch):
+    """run_extraction's persisted page frame runs the batch path's page UDF
+    (one ArrowEvalPython) with part_id taken JVM-side — no second Python
+    crossing (MapInPandas) that ships url-derived columns to Python and
+    back."""
+    from enem_spark.lineage import run_extraction
+
+    pages = corpus.pages_dataframe(
+        spark, corpus.CorpusConfig(seed=2, n_exams=2, pages_per_exam=4)
+    )
+    persisted = []
+    frame_cls = type(pages)
+    persist = frame_cls.persist
+
+    def recording_persist(self, *args, **kwargs):
+        persisted.append(self)
+        return persist(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "persist", recording_persist)
+    run_extraction(
+        spark, pages, ExtractorConfig(output_type="json"),
+        str(tmp_path / "out"), run_id="r1",
+    )
+    (paged,) = [df for df in persisted if "part_id" in df.columns]
+    plan = paged._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1, plan
+    assert "MapInPandas" not in plan, plan
+
+
 def test_image_sink_plan_no_shuffle(spark, tmp_path_factory):
     """materialize_images must stay embarrassingly parallel: one Arrow
     crossing, zero Exchange (shuffle) nodes, and the image-marker prefilter
